@@ -3183,12 +3183,12 @@ def llm_index_compact_cells(spark, sf_dir):
         .filter(~_is_tombstoned())
         .select("vec_id", "cell")
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        live.write.partitionBy("cell").mode("overwrite").parquet(wh)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    (
+        live.write.partitionBy("cell")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(wh)
+    )
     # fully-dead cells emit zero rows into the dynamic overwrite → stale
     # files need an explicit partition drop (≤k cells, bounded read)
     for r in before.filter(F.col("n_before") == F.col("n_tombstoned")).collect():

@@ -136,17 +136,19 @@ def sink_overwrite_partition(spark, sf_dir):
     """Idempotent window reload via dynamic partition overwrite: rewrite
     ONLY the partitions present in the incoming batch, leaving the rest of
     the warehouse untouched — the reference's delete-then-reload recovery,
-    done natively by the committer (no manual deletes)."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    done natively by the committer (no manual deletes). The mode is a
+    per-writer option, so the session's partitionOverwriteMode is never
+    touched."""
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts")
     )
     out = os.path.join(tempfile.mkdtemp(prefix="etl_dynpart_"), "events_by_day")
-    ev.write.mode("overwrite").partitionBy("day").parquet(out)
+    dynamic = {"partitionOverwriteMode": "dynamic"}
+    ev.write.mode("overwrite").options(**dynamic).partitionBy("day").parquet(out)
     # re-load one day twice (the idempotent re-run) — only that directory
     # is rewritten; totals must not change.
     one_day = ev.filter(F.col("day") == "2024-01-15")
-    one_day.write.mode("overwrite").partitionBy("day").parquet(out)
+    one_day.write.mode("overwrite").options(**dynamic).partitionBy("day").parquet(out)
     back = spark.read.parquet(out)
     return (
         back.groupBy("day")

@@ -1074,12 +1074,12 @@ def inc_subject_erasure(spark, sf_dir):
     retained = ev.join(F.broadcast(affected), "bucket", "left_semi").filter(
         ~is_subject
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        retained.write.partitionBy("bucket").mode("overwrite").parquet(wh)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    (
+        retained.write.partitionBy("bucket")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(wh)
+    )
 
     stats = ev.groupBy("bucket").agg(
         F.count("*").alias("rows_before"),

@@ -91,11 +91,11 @@ def test_kneser_ney_gated_plan_is_still_correct(spark):
 def test_lm_gate_reads_bytes_without_an_aggregation_job(spark):
     """The gate must not launch an aggregation job at plan-construction
     time (ADVICE r6: the former c12.count() ran explode+groupBy+count on
-    every plan build). Parquet footer/schema reads do submit trivial
-    single-task jobs — those are inherent to spark.read.parquet — so the
-    invariant is: every job submitted while BUILDING the plan is a
-    1-task read, never a multi-task aggregation (the old count() ran
-    shuffle_partitions-wide)."""
+    every plan build). The first read of a table version still infers its
+    parquet schema with a single-task job (``io.load_table`` reuses the
+    schema afterwards), so the invariant is: every job submitted while
+    BUILDING the plan is a 1-task read, never a multi-task aggregation
+    (the old count() ran shuffle_partitions-wide)."""
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     _ = QUERIES["llm_ngram_kneser_ney"](spark, SF_DIR)  # plan only
