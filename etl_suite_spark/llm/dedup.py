@@ -233,17 +233,25 @@ def _exact_jaccard_truth(sh, threshold=0.5):
     )
 
 
-@query(
-    "llm_dedup_minhash_recall",
-    # The MinHash signatures themselves are engine-specific (xxhash64
-    # seeds), but their QUALITY is oracle-checkable: DuckDB independently
-    # counts the exact-Jaccard>=0.5 ground-truth pairs, and the Spark side
-    # emits that count plus a genuinely computed recall>=0.9 flag of the
-    # LSH candidate set against it — the same honesty-metric pattern as
-    # llm_sim_ann_recall. Both sides are deterministic (fixed seeds), so
-    # the flag is stable; measured recall on the planted near-dups is 1.0
-    # at sf0.001 and sf0.01.
-    oracle=f"""
+def _jaccard_recall(spark, sf_dir, pairs, threshold, flag):
+    """(n_true_pairs, <flag>): recall of the detected (doc_a, doc_b)
+    ``pairs`` against the exact 3-gram-Jaccard >= 0.5 truth, flagged at
+    ``threshold`` — the Spark half of :func:`_jaccard_recall_oracle`."""
+    truth = _exact_jaccard_truth(_shingles(load_table(spark, sf_dir, "documents")))
+    found = truth.join(pairs, ["doc_a", "doc_b"], "left_semi")
+    return truth.agg(F.count("*").alias("n_true")).join(
+        found.agg(F.count("*").alias("n_found"))
+    ).select(
+        F.col("n_true").alias("n_true_pairs"),
+        (F.col("n_found") >= threshold * F.col("n_true")).alias(flag),
+    )
+
+
+def _jaccard_recall_oracle(flag):
+    """DuckDB half of a dedup recall twin: the exact 3-gram-Jaccard >= 0.5
+    pair count, with the measured ``flag`` expected TRUE at the margin
+    the registering op records."""
+    return f"""
     WITH t AS (
       SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w FROM documents
     ), sh AS (
@@ -258,9 +266,22 @@ def _exact_jaccard_truth(sh, threshold=0.5):
       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_true_pairs,
-           TRUE AS recall_ge_90
+           TRUE AS {flag}
     FROM pairs WHERE shared * 1.0 / (na + nb - shared) >= 0.5
-    """,
+    """
+
+
+@query(
+    "llm_dedup_minhash_recall",
+    # The MinHash signatures themselves are engine-specific (xxhash64
+    # seeds), but their QUALITY is oracle-checkable: DuckDB independently
+    # counts the exact-Jaccard>=0.5 ground-truth pairs, and the Spark side
+    # emits that count plus a genuinely computed recall>=0.9 flag of the
+    # LSH candidate set against it — the same honesty-metric pattern as
+    # llm_sim_ann_recall. Both sides are deterministic (fixed seeds), so
+    # the flag is stable; measured recall on the planted near-dups is 1.0
+    # at sf0.001 and sf0.01.
+    oracle=_jaccard_recall_oracle("recall_ge_90"),
 )
 def llm_dedup_minhash_recall(spark, sf_dir):
     """Recall of MinHash-LSH candidate generation (8 bands x 4 rows, the
@@ -272,16 +293,8 @@ def llm_dedup_minhash_recall(spark, sf_dir):
     LSH side is the candidate join from the production operator with no
     est_jaccard filter (recall of CANDIDATE GENERATION, the stage that
     can lose pairs)."""
-    sh = _shingles(load_table(spark, sf_dir, "documents"))
-    truth = _exact_jaccard_truth(sh)
     cand = _band_candidates(_corpus_signatures(spark, sf_dir))
-    found = truth.join(cand, ["doc_a", "doc_b"], "left_semi")
-    return truth.agg(F.count("*").alias("n_true")).join(
-        found.agg(F.count("*").alias("n_found"))
-    ).select(
-        F.col("n_true").alias("n_true_pairs"),
-        (F.col("n_found") >= 0.9 * F.col("n_true")).alias("recall_ge_90"),
-    )
+    return _jaccard_recall(spark, sf_dir, cand, 0.9, "recall_ge_90")
 
 
 @query(
@@ -1851,24 +1864,7 @@ def llm_dedup_threshold_sweep(spark, sf_dir):
     # truth is REPORTED there rather than gated because it is
     # corpus-size-dependent (feature-space mismatch — measured 0.78 /
     # 0.88 / 0.36 at sf0.001 / 0.01 / 0.1).
-    oracle=f"""
-    WITH t AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, len(w) - 1),
-                           i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s
-      FROM t WHERE len(w) >= 3
-    ), pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.s, b.s)) AS shared,
-             len(a.s) AS na, len(b.s) AS nb
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_true_pairs,
-           TRUE AS recall_ge_50
-    FROM pairs WHERE shared * 1.0 / (na + nb - shared) >= 0.5
-    """,
+    oracle=_jaccard_recall_oracle("recall_ge_50"),
 )
 def llm_dedup_simhash_recall(spark, sf_dir):
     """Recall of SimHash Hamming≤3 pair detection against exact
@@ -1891,18 +1887,8 @@ def llm_dedup_simhash_recall(spark, sf_dir):
     a shingle can reach 0.5) — never all-pairs; the SimHash side is the
     production operator's pigeonhole block join unchanged. Scalar-count
     joins only."""
-    sh = _shingles(load_table(spark, sf_dir, "documents"))
-    truth = _exact_jaccard_truth(sh)
     sim = llm_dedup_simhash(spark, sf_dir).select("doc_a", "doc_b")
-    found = truth.join(sim, ["doc_a", "doc_b"], "left_semi")
-    return (
-        truth.agg(F.count("*").alias("n_true"))
-        .join(found.agg(F.count("*").alias("n_found")))
-        .select(
-            F.col("n_true").alias("n_true_pairs"),
-            (F.col("n_found") >= 0.5 * F.col("n_true")).alias("recall_ge_50"),
-        )
-    )
+    return _jaccard_recall(spark, sf_dir, sim, 0.5, "recall_ge_50")
 
 
 @query(

@@ -70,6 +70,65 @@ def _sql_cosine(dot_expr: str, nsq_a: str, nsq_b: str) -> str:
     return f"round({dot_expr} / sqrt({nsq_a} * {nsq_b}), 6)"
 
 
+def _corpus(spark, sf_dir, *cols):
+    """The embeddings corpus as (vec_id, embedding, *cols, nsq), with each
+    vector's squared norm computed once (the module's cost discipline)."""
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding", *cols)
+        .withColumn("nsq", dot("embedding", "embedding"))
+    )
+
+
+def _queries(e, *extra):
+    """The fixed 10-query probe set (vec_id < 10) of a corpus carrying
+    (vec_id, embedding, nsq): (query_id, q_emb, q_nsq, *extra)."""
+    return e.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nsq").alias("q_nsq"),
+        *extra,
+    )
+
+
+_SQL_CORPUS = (
+    f"SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq"
+    " FROM embeddings"
+)
+
+
+def _exact3_oracle(
+    cols,
+    corpus=f"""n AS (
+      {_SQL_CORPUS}
+    )""",
+    q="SELECT * FROM n WHERE vec_id < 10",
+    join_pred="",
+):
+    """DuckDB text of an ANN recall gate, the twin of :func:`_recall_metric`:
+    the exact top-3 cosine neighbours of the 10 queries, reduced to
+    (n_exact_pairs, n_queries, <cols>).  ``corpus`` defines the candidate
+    CTE ``n`` (vec_id, embedding, nsq and any column ``join_pred`` reads),
+    ``q`` selects the queries and ``join_pred`` is one extra candidate
+    conjunct.  ``cols`` are the measured columns, whose expected values
+    are structural: a constant count, or TRUE for a recall flag whose
+    margin the registering op's comment records."""
+    return f"""
+    WITH {corpus}, q AS ({q}), exact3 AS (
+      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
+      FROM q JOIN n e ON e.vec_id <> q.vec_id{join_pred}
+      QUALIFY row_number() OVER (
+          PARTITION BY q.vec_id
+          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
+                   DESC, e.vec_id ASC) <= 3
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
+           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
+           {cols}
+    FROM exact3
+    """
+
+
 @query(
     "llm_sim_cosine_topk",
     oracle=f"""
@@ -96,14 +155,8 @@ def llm_sim_cosine_topk(spark, sf_dir):
     no shuffle of the big side at all. That IS the correct 100 TB plan for
     small query sets; for large ones, switch to llm_sim_ann_lsh below.
     """
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir)
+    q = _queries(e)
     # Widen the candidate side to full parallelism before the N·Q dot
     # stage: the per-pair quantized dot is interpreted (higher-order
     # function), so this stage is COMPUTE-bound, and a single-file scan
@@ -160,14 +213,8 @@ def llm_sim_range_search(spark, sf_dir):
     p99 of the fixture's query-corpus cosine distribution (measured:
     p90 0.16, p99 0.29, max 0.49), so the result is non-trivial and
     bounded."""
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir)
+    q = _queries(e)
     cand = e.repartition(spark.sparkContext.defaultParallelism)
     return (
         cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
@@ -224,17 +271,10 @@ def llm_sim_ann_lsh(spark, sf_dir):
     expectation. Multi-probe (flip one bucket bit) raises recall without
     changing the plan shape.
     """
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn("bucket", F.expr(_BUCKET.format(e="embedding")))
-        .withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir).withColumn(
+        "bucket", F.expr(_BUCKET.format(e="embedding"))
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _queries(e, F.col("bucket").alias("q_bucket"))
     joined = e.join(
         F.broadcast(q),
         (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("query_id")),
@@ -292,17 +332,10 @@ def llm_sim_ann_multiprobe(spark, sf_dir):
     at 100 TB this is the standard recall/cost dial (probes × bucket bits).
     Candidates reached via two different probes are deduped before ranking.
     """
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn("bucket", F.expr(_BUCKET.format(e="embedding")))
-        .withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir).withColumn(
+        "bucket", F.expr(_BUCKET.format(e="embedding"))
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _queries(e, F.col("bucket").alias("q_bucket"))
     probes = q.withColumn(
         "pb",
         F.explode(
@@ -344,23 +377,7 @@ def llm_sim_ann_multiprobe(spark, sf_dir):
     # set (nprobe=2 of 8 cells measures ~0.5 recall, deterministic across
     # reruns — same honesty-metric pattern as llm_sim_ann_recall for LSH
     # and llm_dedup_minhash_recall for MinHash).
-    oracle=f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings
-    ), q AS (SELECT * FROM n WHERE vec_id < 10), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           TRUE AS recall_ge_40
-    FROM exact3
-    """,
+    oracle=_exact3_oracle("TRUE AS recall_ge_40"),
 )
 def llm_sim_ann_ivf_recall(spark, sf_dir):
     """Recall@3 of the IVF-Flat probe (llm_sim_ann_ivf, nprobe=2 of 8
@@ -368,37 +385,8 @@ def llm_sim_ann_ivf_recall(spark, sf_dir):
     op for the learned-quantizer ANN path. Exact ground truth runs on the
     broadcast 10-query side only, never all-pairs over the corpus."""
     ivf = llm_sim_ann_ivf(spark, sf_dir).select("query_id", "neighbor_id")
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    cos = _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    exact3 = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-        # k-row lineage truncation (r14, the _recall_metric pattern)
-        .localCheckpoint(eager=True)
-    )
-    ivf = ivf.localCheckpoint(eager=True)
-    found = exact3.join(ivf, ["query_id", "neighbor_id"], "left_semi")
-    return exact3.agg(
-        F.count("*").alias("n_exact_pairs"),
-        F.count_distinct("query_id").alias("n_queries"),
-    ).join(found.agg(F.count("*").alias("n_found"))).select(
-        "n_exact_pairs",
-        "n_queries",
-        (F.col("n_found") >= 0.4 * F.col("n_exact_pairs")).alias("recall_ge_40"),
-    )
+    e = _corpus(spark, sf_dir)
+    return _recall_metric(ivf, e, _queries(e), 0.4, "recall_ge_40")
 
 
 # Shared IVF-Flat coarse-quantizer hyperparams — named so DERIVED index
@@ -446,7 +434,7 @@ def _ivf_probe(cells, centroids, q, nprobe=2, q_extra=(), cand_pred=None):
     (raw corpus), llm_index_build_pipeline_ivf (representatives), the
     delete/rebalance twins, and (via ``q_extra``/``cand_pred``) the
     filtered-search op — ONE probe so the serving contract cannot
-    diverge between variants (the _survivor_recall_metric discipline,
+    diverge between variants (the _recall_metric discipline,
     code-review r12).  ``q_extra`` names extra query columns to carry to
     the candidate join; ``cand_pred`` is an extra join conjunct
     evaluated DURING the inverted-list scan (payload-filter pushdown)."""
@@ -505,16 +493,10 @@ def llm_sim_ann_ivf(spark, sf_dir):
     (partition pruning at the scan). Learned centroids adapt to the data
     distribution, unlike the fixed hyperplanes of llm_sim_ann_lsh.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir)
     assigned, centroids = _ivf_index(spark, sf_dir)
     cells = e.join(assigned, "vec_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _queries(e)
     return _ivf_probe(cells, centroids, q)
 
 
@@ -617,13 +599,8 @@ def llm_sim_knn_classify(spark, sf_dir):
     generation (``llm_sim_ann_lsh`` / ``llm_sim_ann_ivf``) with this
     same voting tail — the vote logic is candidate-source-agnostic.
     """
-    e = load_table(spark, sf_dir, "embeddings")
-    n = e.select("vec_id", "label", "embedding", dot("embedding", "embedding").alias("nsq"))
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    n = _corpus(spark, sf_dir, "label")
+    q = _queries(n)
     pairs = F.broadcast(q).join(n, F.col("vec_id") != F.col("query_id"))
     scored = pairs.select(
         "query_id",
@@ -725,41 +702,13 @@ def llm_sim_ann_recall(spark, sf_dir):
     loses. Both sides are deterministic, so even the quality metric is
     oracle-checked. Ground truth runs on the (tiny, broadcast) query set
     only — never an all-pairs job over the corpus."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn("bucket", F.expr(_BUCKET.format(e="embedding")))
-        .withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir).withColumn(
+        "bucket", F.expr(_BUCKET.format(e="embedding"))
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    cos = _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-
-    def top3(pairs):
-        return (
-            pairs.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .select("query_id", "neighbor_id")
-        )
-
-    exact3 = top3(
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-    )
-    lsh3 = top3(
-        e.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("q_bucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        ).select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-    )
+    q = _queries(e, F.col("bucket").alias("q_bucket"))
+    exact3 = _exact_top3(e, q)
+    # the LSH top-3 is the exact top-3 restricted to the query's bucket
+    lsh3 = _exact_top3(e, q, F.col("bucket") == F.col("q_bucket"))
     hit = lsh3.withColumnRenamed("neighbor_id", "hit_id")
     return (
         exact3.join(
@@ -776,6 +725,9 @@ def llm_sim_ann_recall(spark, sf_dir):
     )
 
 
+_UNIT_EXPR = "transform(embedding, x -> CAST(CAST(x AS DOUBLE) / sqrt(nsq) AS FLOAT))"
+
+
 def _pq_normalize(spark, sf_dir):
     """(e, en): raw embeddings with norms, and the L2-normalized corpus
     MATERIALIZED once (localCheckpoint). Without the barrier,
@@ -789,18 +741,9 @@ def _pq_normalize(spark, sf_dir):
     every downstream stage (measured at 10× fixture scale: the whole
     index build ran on 2 of 32 cores). At 100 TB you'd persist the
     normalized corpus once anyway — it's the PQ encode input."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir)
     en = (
-        e.select(
-            "vec_id",
-            "embedding",
-            "nsq",
-            F.expr(
-                "transform(embedding, x -> CAST(CAST(x AS DOUBLE) / sqrt(nsq) AS FLOAT))"
-            ).alias("unit"),
-        )
+        e.select("vec_id", "embedding", "nsq", F.expr(_UNIT_EXPR).alias("unit"))
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .localCheckpoint(eager=True)
     )
@@ -950,19 +893,11 @@ def _adc_table(qdf, cent, key_cols, vec_col, m=8, ksub=16, subdim=8):
     )
 
 
-_UNIT_EXPR = "transform(embedding, x -> CAST(CAST(x AS DOUBLE) / sqrt(nsq) AS FLOAT))"
-
-
 def _raw_queries(e):
-    """The 10-query probe set derived from the RAW corpus: normalization
-    runs on just these rows (the q_unit transform is identical to
-    _pq_normalize's, so ADC tables built from it match the index)."""
-    return e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-        F.expr(_UNIT_EXPR).alias("q_unit"),
-    )
+    """The 10-query probe set derived from the RAW corpus plus its unit
+    vectors: normalization runs on just these rows (the same _UNIT_EXPR as
+    _pq_normalize, so ADC tables built from it match the index)."""
+    return _queries(e, F.expr(_UNIT_EXPR).alias("q_unit"))
 
 
 def _pq_index(spark, sf_dir, m=8, ksub=16, subdim=8):
@@ -996,9 +931,7 @@ def _pq_parts(spark, sf_dir, m=8, ksub=16, subdim=8):
     Returns (e, codes, q, qtab); see :func:`llm_sim_ann_pq` for the full
     design rationale."""
     cent, codes = _pq_index(spark, sf_dir, m=m, ksub=ksub, subdim=subdim)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir)
     q = _raw_queries(e)
     qtab = _adc_table(q, cent, ["query_id"], "q_unit", m=m, ksub=ksub, subdim=subdim)
     return e, codes, q, qtab
@@ -1274,22 +1207,24 @@ def llm_sim_ann_ivfpq(spark, sf_dir):
     0.83-0.86 s warm probe; cold build 7.2 s in pass 1 / scale smoke)."""
     m, ksub, subdim = 8, 16, 8
     coded, cent, coarse = _ivfpq_index(spark, sf_dir, m=m, ksub=ksub, subdim=subdim)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir)
     q = _raw_queries(e)
     return _ivfpq_probe(coded, cent, coarse, e, q, m=m, ksub=ksub, subdim=subdim)
 
 
-def _exact_top3(e, q):
+def _exact_top3(e, q, cand_pred=None):
     """Brute-force exact top-3 cosine pairs for the broadcast query set —
-    the shared ground truth of every ANN recall gate."""
+    the shared ground truth of every ANN recall gate.  ``cand_pred`` is
+    an extra candidate conjunct (the filtered twin's same-label rule)."""
     cos = _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
+    cond = F.col("vec_id") != F.col("query_id")
+    if cand_pred is not None:
+        cond = cond & cand_pred
     return (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+        e.join(F.broadcast(q), cond)
         .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
@@ -1297,9 +1232,16 @@ def _exact_top3(e, q):
     )
 
 
-def _recall_metric(ann, e, q, threshold, flag_name):
-    """(n_exact_pairs, n_queries, <flag>): measured recall of ``ann``
-    pairs against the exact top-3, flagged at ``threshold``.
+def _recall_metric(
+    ann, e, q, threshold, flag_name, extra=None, cand_pred=None
+):
+    """(n_exact_pairs, n_queries[, <extra>], <flag>): measured recall of
+    ``ann`` pairs against the exact top-3 of ``q`` over ``e`` (restricted
+    by ``cand_pred``, see :func:`_exact_top3`), flagged at ``threshold``
+    — the Spark half of every ANN recall gate; :func:`_exact3_oracle` is
+    the DuckDB half.  ``extra`` is (name, frame_of): the row count of
+    ``frame_of(ann)``, given the checkpointed ann pairs, becomes column
+    ``name`` (surfaced tombstones, filter violations, assigned vectors).
 
     r14 (optimization round; results bit-identical): ``exact3`` and
     ``ann`` are localCheckpoint-ed before the metric fans out. Both are
@@ -1312,15 +1254,20 @@ def _recall_metric(ann, e, q, threshold, flag_name):
     exactly once (guide §2.4/§5: cut the plan where the data is small,
     e.g. llm_index_tombstone_probe_recall 12 parquet scans / 11
     shuffle exchanges -> 0 scans (checkpoint reads) / 6, plans/r14/)."""
-    exact3 = _exact_top3(e, q).localCheckpoint(eager=True)
+    exact3 = _exact_top3(e, q, cand_pred).localCheckpoint(eager=True)
     ann = ann.localCheckpoint(eager=True)
     found = exact3.join(ann, ["query_id", "neighbor_id"], "left_semi")
-    return exact3.agg(
+    out = exact3.agg(
         F.count("*").alias("n_exact_pairs"),
         F.count_distinct("query_id").alias("n_queries"),
-    ).join(found.agg(F.count("*").alias("n_found"))).select(
-        "n_exact_pairs",
-        "n_queries",
+    ).join(found.agg(F.count("*").alias("n_found")))
+    cols = ["n_exact_pairs", "n_queries"]
+    if extra is not None:
+        name, frame_of = extra
+        out = out.join(frame_of(ann).agg(F.count("*").alias(name)))
+        cols.append(name)
+    return out.select(
+        *cols,
         (F.col("n_found") >= threshold * F.col("n_exact_pairs")).alias(flag_name),
     )
 
@@ -1333,23 +1280,7 @@ def _recall_metric(ann, e, q, threshold, flag_name):
     # Spark reports a genuinely measured recall flag against it. Measured
     # margin (ADVICE r3 discipline): recall@3 = 0.60 at sf0.001 / 0.70 at
     # sf0.01 vs the 0.40 threshold — ≥1.5× headroom on both fixtures.
-    oracle=f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings
-    ), q AS (SELECT * FROM n WHERE vec_id < 10), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           TRUE AS recall_ge_40
-    FROM exact3
-    """,
+    oracle=_exact3_oracle("TRUE AS recall_ge_40"),
 )
 def llm_sim_ann_pq_recall(spark, sf_dir):
     """Recall@3 of the PQ/ADC index (llm_sim_ann_pq: m=8×k=16 codebooks,
@@ -1359,14 +1290,8 @@ def llm_sim_ann_pq_recall(spark, sf_dir):
     scores at the random-chance rate (32/N), and only a measured recall
     gate makes that visible."""
     pq = llm_sim_ann_pq(spark, sf_dir).select("query_id", "neighbor_id")
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir)
+    q = _queries(e)
     return _recall_metric(pq, e, q, 0.4, "recall_ge_40")
 
 
@@ -1379,36 +1304,14 @@ def llm_sim_ann_pq_recall(spark, sf_dir):
     # whose cell it visits (IVF nprobe=2/8 measures ~0.5 alone), and ADC
     # ranking loses a little more. The gate catches either quantizer
     # silently breaking.
-    oracle=f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings
-    ), q AS (SELECT * FROM n WHERE vec_id < 10), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           TRUE AS recall_ge_30
-    FROM exact3
-    """,
+    oracle=_exact3_oracle("TRUE AS recall_ge_30"),
 )
 def llm_sim_ann_ivfpq_recall(spark, sf_dir):
     """Recall@3 of the IVF-PQ composite against brute-force exact top-3 —
     the measured honesty metric for the cell-routed compressed index."""
     ann = llm_sim_ann_ivfpq(spark, sf_dir).select("query_id", "neighbor_id")
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir)
+    q = _queries(e)
     return _recall_metric(ann, e, q, 0.3, "recall_ge_30")
 
 
@@ -1431,14 +1334,8 @@ def llm_sim_mmr_rerank(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir)
+    q = _queries(e)
     cand = e.repartition(spark.sparkContext.defaultParallelism)
     scored = cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
@@ -1622,15 +1519,8 @@ def llm_hard_negatives(spark, sf_dir):
     predicate inside the join (so same-class candidates are dropped
     before scoring, not ranked then filtered: the returned rank is the
     rank AMONG negatives)."""
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir, "label")
+    q = _queries(e, F.col("label").alias("query_label"))
     cand = e.repartition(spark.sparkContext.defaultParallelism)
     scored = cand.join(
         F.broadcast(q), F.col("label") != F.col("query_label")
@@ -1754,17 +1644,10 @@ def llm_retrieval_ndcg(spark, sf_dir):
     construction. DCG folds in DECIMAL(10,8) (see _NDCG_DISC) so both
     engines sum exactly; all final divisions are double-on-double with
     identical operand trees."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn("bucket", F.expr(_BUCKET.format(e="embedding")))
-        .withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir).withColumn(
+        "bucket", F.expr(_BUCKET.format(e="embedding"))
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _queries(e, F.col("bucket").alias("q_bucket"))
     wq = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
@@ -2276,6 +2159,22 @@ _SQL_SIGN_SIG = (
     " THEN '1' ELSE '0' END), '')"
 )
 
+# _exact3_oracle arguments of the dedup-before-index twins: candidates are
+# the min-id representative per sign signature (_dedup_reps), queries
+# still come from the raw corpus.
+_SQL_DEDUP_CORPUS = f"""reps AS (
+      SELECT vec_id, embedding FROM (
+        SELECT vec_id, embedding,
+               row_number() OVER (PARTITION BY {_SQL_SIGN_SIG}
+                                  ORDER BY vec_id) AS rn
+        FROM embeddings
+      ) WHERE rn = 1
+    ), n AS (
+      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
+      FROM reps
+    )"""
+_SQL_RAW_QUERIES = f"{_SQL_CORPUS} WHERE vec_id < 10"
+
 
 def _dedup_reps(spark, sf_dir):
     """Min-vec_id representative per 32-bit sign signature — the
@@ -2294,12 +2193,13 @@ def _dedup_reps(spark, sf_dir):
 
 
 def _dedup_reps_materialized(spark, sf_dir):
-    """The representative set, PERSISTED once per corpus (write-once):
-    the dedup shuffle would otherwise re-run in every plan branch that
-    needs the reps — index build, exact re-rank, and the recall twin's
-    ground truth each scan it (code-review r9 finding #3: three
-    corpus-wide shuffles per recall run at the 3 M-vector tier).
-    Partitioned on vec_id so downstream joins start co-located."""
+    """The representative set (vec_id, embedding, nsq), PERSISTED once per
+    corpus (write-once): the dedup shuffle would otherwise re-run in every
+    plan branch that needs the reps — index build, exact re-rank, and the
+    recall twin's ground truth each scan it (code-review r9 finding #3:
+    three corpus-wide shuffles per recall run at the 3 M-vector tier).
+    Partitioned on vec_id so downstream joins start co-located; nsq is
+    derived after the read, so the persisted layout is unchanged."""
     from ..core import materialize_once
 
     return materialize_once(
@@ -2308,7 +2208,7 @@ def _dedup_reps_materialized(spark, sf_dir):
         f"v1:dedup_reps:{sf_dir}",
         partition_col="vec_id",
         n_partitions=8,
-    )
+    ).withColumn("nsq", dot("embedding", "embedding"))
 
 
 def _pq_dedup_index(spark, sf_dir, m=8, ksub=16, subdim=8):
@@ -2323,9 +2223,7 @@ def _pq_dedup_index(spark, sf_dir, m=8, ksub=16, subdim=8):
 
     tok = f"v2:pq_dedup_index:{sf_dir}:m{m}k{ksub}d{subdim}"
     if not (mat_exists(tok + ":cent") and mat_exists(tok + ":codes")):
-        reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-            "nsq", dot("embedding", "embedding")
-        )
+        reps = _dedup_reps_materialized(spark, sf_dir)
         en = (
             reps.select(
                 "vec_id", "embedding", "nsq", F.expr(_UNIT_EXPR).alias("unit")
@@ -2379,14 +2277,8 @@ def llm_index_build_pipeline(spark, sf_dir):
     known near-duplicate-free can keep the raw build."""
     m, ksub, pool = 8, 16, 32
     cent, codes = _pq_dedup_index(spark, sf_dir, m=m, ksub=ksub)
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = _raw_queries(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    reps = _dedup_reps_materialized(spark, sf_dir)
+    q = _raw_queries(_corpus(spark, sf_dir))
     qtab = _adc_table(q, cent, ["query_id"], "q_unit", m=m, ksub=ksub)
     adc = codes.crossJoin(F.broadcast(qtab)).select(
         "query_id",
@@ -2411,51 +2303,17 @@ def llm_index_build_pipeline(spark, sf_dir):
     # threshold, and — the reason this op exists — the gate stays green
     # at the duplicate-heavy 100× and 1500× smoke tiers where flat PQ
     # without the dedup stage fails outright (BASELINE addendum 26).
-    oracle=f"""
-    WITH reps AS (
-      SELECT vec_id, embedding FROM (
-        SELECT vec_id, embedding,
-               row_number() OVER (PARTITION BY {_SQL_SIGN_SIG}
-                                  ORDER BY vec_id) AS rn
-        FROM embeddings
-      ) WHERE rn = 1
-    ), n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM reps
-    ), q AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings WHERE vec_id < 10
-    ), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           TRUE AS recall_ge_40
-    FROM exact3
-    """,
+    oracle=_exact3_oracle(
+        "TRUE AS recall_ge_40", corpus=_SQL_DEDUP_CORPUS, q=_SQL_RAW_QUERIES
+    ),
 )
 def llm_index_build_pipeline_recall(spark, sf_dir):
     """Recall@3 of the dedup-before-index pipeline against brute-force
     exact top-3 over the deduped representatives — the driver-checkable
     form of the addendum-26 remedy measurement."""
     ann = llm_index_build_pipeline(spark, sf_dir).select("query_id", "neighbor_id")
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            dot("embedding", "embedding").alias("q_nsq"),
-        )
-    )
+    reps = _dedup_reps_materialized(spark, sf_dir)
+    q = _queries(_corpus(spark, sf_dir))
     return _recall_metric(ann, reps, q, 0.4, "recall_ge_40")
 
 
@@ -2477,9 +2335,7 @@ def _ivfpq_dedup_index(spark, sf_dir, m=8, ksub=16, subdim=8):
     tok = f"v1:ivfpq_dedup_index:{sf_dir}:m{m}k{ksub}d{subdim}"
     names = (":coded", ":cent", ":coarse")
     if not all(mat_exists(tok + n) for n in names):
-        reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-            "nsq", dot("embedding", "embedding")
-        )
+        reps = _dedup_reps_materialized(spark, sf_dir)
         en = (
             reps.select(
                 "vec_id", "embedding", "nsq", F.expr(_UNIT_EXPR).alias("unit")
@@ -2526,14 +2382,8 @@ def llm_index_build_pipeline_ivfpq(spark, sf_dir):
     coded, cent, coarse = _ivfpq_dedup_index(
         spark, sf_dir, m=m, ksub=ksub, subdim=subdim
     )
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = _raw_queries(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    reps = _dedup_reps_materialized(spark, sf_dir)
+    q = _raw_queries(_corpus(spark, sf_dir))
     return _ivfpq_probe(coded, cent, coarse, reps, q, m=m, ksub=ksub, subdim=subdim)
 
 
@@ -2551,33 +2401,9 @@ def llm_index_build_pipeline_ivfpq(spark, sf_dir):
     # IVF-PQ on these duplicate-free fixtures (the dedup stage collapses
     # nothing at 1×; its value shows at the duplicate-heavy smoke tiers,
     # where the sentinel matrix pins this op expected-green).
-    oracle=f"""
-    WITH reps AS (
-      SELECT vec_id, embedding FROM (
-        SELECT vec_id, embedding,
-               row_number() OVER (PARTITION BY {_SQL_SIGN_SIG}
-                                  ORDER BY vec_id) AS rn
-        FROM embeddings
-      ) WHERE rn = 1
-    ), n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM reps
-    ), q AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings WHERE vec_id < 10
-    ), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           TRUE AS recall_ge_30
-    FROM exact3
-    """,
+    oracle=_exact3_oracle(
+        "TRUE AS recall_ge_30", corpus=_SQL_DEDUP_CORPUS, q=_SQL_RAW_QUERIES
+    ),
 )
 def llm_index_build_pipeline_ivfpq_recall(spark, sf_dir):
     """Recall@3 of the dedup-IVF-PQ pipeline against brute-force exact
@@ -2586,18 +2412,8 @@ def llm_index_build_pipeline_ivfpq_recall(spark, sf_dir):
     ann = llm_index_build_pipeline_ivfpq(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            dot("embedding", "embedding").alias("q_nsq"),
-        )
-    )
+    reps = _dedup_reps_materialized(spark, sf_dir)
+    q = _queries(_corpus(spark, sf_dir))
     return _recall_metric(ann, reps, q, 0.3, "recall_ge_30")
 
 # ---------------------------------------------------------------------------
@@ -2709,19 +2525,14 @@ def llm_emb_matryoshka_recall(spark, sf_dir):
     (plans/r14/llm_emb_matryoshka_recall_{before,after}.txt).
     Per-pair work is still a d-term exact integer fold per dim; nothing
     corpus-proportional shuffles beyond the top-3 windows per query."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = _corpus(spark, sf_dir)
     # hash-repartition on vec_id for scoring parallelism: deterministic
     # (safe under task retry) and skips round-robin's sort-before-
     # repartition; the single scoring pass amortizes the one exchange.
     cand = e.repartition(spark.sparkContext.defaultParallelism, "vec_id")
     dims = _MATRYOSHKA_DIMS
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        *[
-            _dot_d("embedding", "embedding", d).alias(f"q_nsq_{d}")
-            for d in dims
-        ],
+    q = _queries(
+        e, *[_dot_d("embedding", "embedding", d).alias(f"q_nsq_{d}") for d in dims]
     )
     pairs = (
         cand.select(
@@ -2893,69 +2704,18 @@ def llm_index_incremental_add(spark, sf_dir):
     # exactly as the full-corpus IVF twin documents — the sf0.01 dip vs
     # full-corpus-trained IVF is the price of the frozen quantizer,
     # which is the honest trade this op exists to measure).
-    oracle=f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings
-    ), q AS (SELECT * FROM n WHERE vec_id < 10), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           TRUE AS recall_ge_30
-    FROM exact3
-    """,
+    oracle=_exact3_oracle("TRUE AS recall_ge_30"),
 )
 def llm_index_incremental_add_recall(spark, sf_dir):
     """Recall@3 of an IVF probe over the incrementally-extended index
     (frozen base quantizer + delta assigned map-only) against brute-force
     exact top-3 over the FULL corpus — the measured proof that the
     delta-ingest path serves queries without a retrain."""
-    from .clustering import _DIST_SQ
-
     base_cells, delta_cells, centroids = _ivf_incr_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir)
     cells = e.join(base_cells.unionByName(delta_cells), "vec_id")
-
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    qc = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "cdist", F.expr(_DIST_SQ.format(a="q_emb", b="centroid"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("cdist").asc(), F.col("cluster").asc()
-    )
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= 2)
-        .select("query_id", F.col("cluster").alias("p_cell"))
-    )
-    cand = cells.join(
-        F.broadcast(probes.join(q, "query_id")),
-        (F.col("cell") == F.col("p_cell")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    ann = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
+    q = _queries(e)
+    ann = _ivf_probe(cells, centroids, q).select("query_id", "neighbor_id")
     return _recall_metric(ann, e, q, 0.3, "recall_ge_30")
 
 
@@ -2968,63 +2728,27 @@ def llm_index_incremental_add_recall(spark, sf_dir):
 _TOMBSTONE_RESIDUE = SUBJECT_RESIDUE
 
 
-def _is_tombstoned():
-    return (F.col("vec_id") % _TOMBSTONE_RESIDUE) == 0
+def _is_tombstoned(col="vec_id"):
+    return (F.col(col) % _TOMBSTONE_RESIDUE) == 0
 
 
-def _survivor_recall_metric(ann, survivors, q):
-    """(n_exact_pairs, n_queries, n_deleted_surfaced, recall_ge_30) of
-    tombstone-aware ANN results against exact top-3 over the SURVIVOR
-    corpus — shared by the logical (filtered-probe) and physical
-    (compacted-cells) delete twins so the metric contract cannot
-    diverge between them (code-review r11).
-
-    Same k-row lineage truncation as :func:`_recall_metric` (r14): the
-    three metric branches (exact3 agg, semi-join, surfaced filter) read
-    checkpointed ≤30-row frames instead of re-deriving the corpus-wide
-    scoring/probe subtrees per branch."""
-    exact3 = _exact_top3(survivors, q).localCheckpoint(eager=True)
-    ann = ann.localCheckpoint(eager=True)
-    found = exact3.join(ann, ["query_id", "neighbor_id"], "left_semi")
-    surfaced = ann.filter((F.col("neighbor_id") % _TOMBSTONE_RESIDUE) == 0)
-    return (
-        exact3.agg(
-            F.count("*").alias("n_exact_pairs"),
-            F.count_distinct("query_id").alias("n_queries"),
-        )
-        .join(found.agg(F.count("*").alias("n_found")))
-        .join(surfaced.agg(F.count("*").cast("long").alias("n_deleted_surfaced")))
-        .select(
-            "n_exact_pairs",
-            "n_queries",
-            "n_deleted_surfaced",
-            (F.col("n_found") >= 0.3 * F.col("n_exact_pairs")).alias(
-                "recall_ge_30"
-            ),
-        )
-    )
+# _recall_metric extra of the survivor twins: deleted ids that surfaced in
+# the ANN results (structurally zero).
+_SURFACED_DELETED = (
+    "n_deleted_surfaced",
+    lambda ann: ann.filter(_is_tombstoned("neighbor_id")),
+)
 
 
-# One oracle text for both delete twins — exact top-3 over survivors,
-# structural zero for surfaced-deleted, measured-flag TRUE expectation.
-_SURVIVOR_RECALL_ORACLE = f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings WHERE vec_id % {_TOMBSTONE_RESIDUE} <> 0
-    ), q AS (SELECT * FROM n WHERE vec_id < 10), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           CAST(0 AS BIGINT) AS n_deleted_surfaced,
-           TRUE AS recall_ge_30
-    FROM exact3
-    """
+# One oracle text for the survivor twins (tombstone, compact-cells,
+# retrain) — exact top-3 over survivors, structural zero for
+# surfaced-deleted, measured-flag TRUE expectation.
+_SURVIVOR_RECALL_ORACLE = _exact3_oracle(
+    "CAST(0 AS BIGINT) AS n_deleted_surfaced, TRUE AS recall_ge_30",
+    corpus=f"""n AS (
+      {_SQL_CORPUS} WHERE vec_id % {_TOMBSTONE_RESIDUE} <> 0
+    )""",
+)
 
 
 @query("llm_index_tombstone_probe")  # rows-only: k-means cells are iterative
@@ -3098,23 +2822,16 @@ def llm_index_tombstone_probe_recall(spark, sf_dir):
     query set also excludes tombstoned ids (erased subjects don't
     query). Same frozen, persisted quantizer as llm_sim_ann_ivf — the
     index trained BEFORE the deletes, which is the production order."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
-    survivors = e.filter(~_is_tombstoned())
+    survivors = _corpus(spark, sf_dir).filter(~_is_tombstoned())
     assigned, centroids = _ivf_index(spark, sf_dir)
     # serving-layer delete: the live candidate set is the cell assignment
     # minus the tombstone set — the write-once index files are untouched
     live_cells = survivors.join(assigned, "vec_id")
-    q = survivors.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _queries(survivors)
     ann = _ivf_probe(live_cells, centroids, q).select("query_id", "neighbor_id")
-    return _survivor_recall_metric(ann, survivors, q)
+    return _recall_metric(
+        ann, survivors, q, 0.3, "recall_ge_30", extra=_SURFACED_DELETED
+    )
 
 
 # Pytest hooks for llm_index_compact_cells: [warehouse, pre-compaction
@@ -3235,27 +2952,19 @@ def llm_index_compact_cells_recall(spark, sf_dir):
     surfaced (structurally zero only if compaction really removed
     them). The physical-delete proof to the tombstone twin's
     logical-delete proof."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    e = _corpus(spark, sf_dir)
     assigned, centroids = _ivf_index(spark, sf_dir)
     # in-plan compaction result: live assignment only (equivalent to the
     # compacted warehouse llm_index_compact_cells writes; recomputed here
     # so this op needs no cross-op temp-dir handshake)
     compacted = assigned.filter(~_is_tombstoned())
     cells = e.join(compacted, "vec_id")  # dead ids drop out of the join
-    q = (
-        e.filter((F.col("vec_id") < 10) & ~_is_tombstoned())
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nsq").alias("q_nsq"),
-        )
-    )
+    survivors = e.filter(~_is_tombstoned())
+    q = _queries(survivors)
     ann = _ivf_probe(cells, centroids, q).select("query_id", "neighbor_id")
-    return _survivor_recall_metric(ann, e.filter(~_is_tombstoned()), q)
+    return _recall_metric(
+        ann, survivors, q, 0.3, "recall_ge_30", extra=_SURFACED_DELETED
+    )
 
 
 def _ivf_dedup_index(spark, sf_dir, k=8, iters=3):
@@ -3309,20 +3018,10 @@ def llm_index_build_pipeline_ivf(spark, sf_dir):
     Gain is proportional to duplicate mass — at 1.11x dup the pipeline
     is ~parity with the raw build (addendum 44); skip the stage only
     when the corpus is KNOWN near-duplicate-free."""
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
+    reps = _dedup_reps_materialized(spark, sf_dir)
     assigned, centroids = _ivf_dedup_index(spark, sf_dir)
     cells = reps.join(assigned, "vec_id")
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            dot("embedding", "embedding").alias("q_nsq"),
-        )
-    )
+    q = _queries(_corpus(spark, sf_dir))
     return _ivf_probe(cells, centroids, q)
 
 
@@ -3334,33 +3033,9 @@ def llm_index_build_pipeline_ivf(spark, sf_dir):
     # Spark reports a measured recall flag. Measured: recall@3 = 0.500
     # at sf0.001 (15/30) / 0.533 at sf0.01 (16/30) vs the 0.40 gate —
     # the same nprobe=2/8 routing bound as the raw IVF twin.
-    oracle=f"""
-    WITH reps AS (
-      SELECT vec_id, embedding FROM (
-        SELECT vec_id, embedding,
-               row_number() OVER (PARTITION BY {_SQL_SIGN_SIG}
-                                  ORDER BY vec_id) AS rn
-        FROM embeddings
-      ) WHERE rn = 1
-    ), n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM reps
-    ), q AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings WHERE vec_id < 10
-    ), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           TRUE AS recall_ge_40
-    FROM exact3
-    """,
+    oracle=_exact3_oracle(
+        "TRUE AS recall_ge_40", corpus=_SQL_DEDUP_CORPUS, q=_SQL_RAW_QUERIES
+    ),
 )
 def llm_index_build_pipeline_ivf_recall(spark, sf_dir):
     """Recall@3 of the dedup-IVF-Flat pipeline against brute-force exact
@@ -3368,18 +3043,8 @@ def llm_index_build_pipeline_ivf_recall(spark, sf_dir):
     ann = llm_index_build_pipeline_ivf(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            dot("embedding", "embedding").alias("q_nsq"),
-        )
-    )
+    reps = _dedup_reps_materialized(spark, sf_dir)
+    q = _queries(_corpus(spark, sf_dir))
     return _recall_metric(ann, reps, q, 0.4, "recall_ge_40")
 
 
@@ -3919,19 +3584,10 @@ def llm_sim_ann_filtered(spark, sf_dir):
     (k-means cells engine-specific); the oracled
     llm_sim_ann_filtered_recall twin hash-pins the zero-violation
     contract and gates recall against the exact filtered ground truth."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding", "label")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    e = _corpus(spark, sf_dir, "label")
     assigned, centroids = _ivf_index(spark, sf_dir)
     cells = e.join(assigned, "vec_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("label").alias("q_label"),
-    )
+    q = _queries(e, F.col("label").alias("q_label"))
     return _ivf_probe_filtered(cells, centroids, q)
 
 
@@ -3946,101 +3602,39 @@ def llm_sim_ann_filtered(spark, sf_dir):
     # filter that gutted recall breaks the flag.  Measured margin:
     # recall@3 = 0.800 at sf0.001 / 0.667 at sf0.01 vs the 0.30
     # threshold (~2.2-2.7x headroom).
-    oracle=f"""
-    WITH n AS (
+    oracle=_exact3_oracle(
+        "CAST(0 AS BIGINT) AS n_filter_violations, TRUE AS recall_ge_30",
+        corpus=f"""n AS (
       SELECT vec_id, embedding, label,
              {sql_dot('embedding', 'embedding')} AS nsq
       FROM embeddings
-    ), q AS (SELECT * FROM n WHERE vec_id < 10), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id AND e.label = q.label
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           CAST(0 AS BIGINT) AS n_filter_violations,
-           TRUE AS recall_ge_30
-    FROM exact3
-    """,
+    )""",
+        join_pred=" AND e.label = q.label",
+    ),
 )
 def llm_sim_ann_filtered_recall(spark, sf_dir):
     """Recall@3 of the filtered IVF probe against the exact same-label
     top-3, plus the measured count of filter-violating results (must be
     zero) — the filtered-search analogue of the tombstone twin's
     n_deleted_surfaced contract."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding", "label")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    e = _corpus(spark, sf_dir, "label")
     ann = llm_sim_ann_filtered(spark, sf_dir).select("query_id", "neighbor_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("label").alias("q_label"),
-    )
-    exact3 = (
-        e.join(
-            F.broadcast(q),
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") == F.col("q_label")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cosine").desc(), F.col("neighbor_id").asc()
-                )
-            ),
-        )
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-        # k-row lineage truncation (r14, the _recall_metric pattern):
-        # exact3 and the filtered probe each compute once; the found and
-        # violations branches read the ≤30-row checkpoints.
-        .localCheckpoint(eager=True)
-    )
-    ann = ann.localCheckpoint(eager=True)
-    found = exact3.join(ann, ["query_id", "neighbor_id"], "left_semi")
-    violations = (
-        ann.join(
-            e.select(F.col("vec_id").alias("neighbor_id"), "label"),
-            "neighbor_id",
-        )
-        .join(
-            q.select("query_id", "q_label"),
-            "query_id",
-        )
-        .filter(F.col("label") != F.col("q_label"))
-    )
-    return (
-        exact3.agg(
-            F.count("*").alias("n_exact_pairs"),
-            F.count_distinct("query_id").alias("n_queries"),
-        )
-        .join(found.agg(F.count("*").alias("n_found")))
-        .join(
-            violations.agg(
-                F.count("*").cast("long").alias("n_filter_violations")
+    q = _queries(e, F.col("label").alias("q_label"))
+
+    def violations(ann):
+        return (
+            ann.join(
+                e.select(F.col("vec_id").alias("neighbor_id"), "label"),
+                "neighbor_id",
             )
+            .join(q.select("query_id", "q_label"), "query_id")
+            .filter(F.col("label") != F.col("q_label"))
         )
-        .select(
-            "n_exact_pairs",
-            "n_queries",
-            "n_filter_violations",
-            (F.col("n_found") >= 0.3 * F.col("n_exact_pairs")).alias(
-                "recall_ge_30"
-            ),
-        )
+
+    return _recall_metric(
+        ann, e, q, 0.3, "recall_ge_30",
+        extra=("n_filter_violations", violations),
+        cand_pred=F.col("label") == F.col("q_label"),
     )
 
 
@@ -4190,67 +3784,24 @@ def llm_index_cell_rebalance(spark, sf_dir):
     # recall@3 = 0.433 at sf0.001 / 0.567 at sf0.01 vs the 0.30
     # threshold (nprobe=2 of the now-10 cells — per-probe candidate work
     # DROPS after the split, and recall holds the unsplit index's band).
-    oracle=f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings
-    ), q AS (SELECT * FROM n WHERE vec_id < 10), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings) AS n_assigned,
-           TRUE AS recall_ge_30
-    FROM exact3
-    """,
+    oracle=_exact3_oracle(
+        "(SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings) AS n_assigned,"
+        " TRUE AS recall_ge_30"
+    ),
 )
 def llm_index_cell_rebalance_recall(spark, sf_dir):
     """Recall@3 of an nprobe=2 probe over the REBALANCED cell layout
     against brute-force exact top-3, plus the measured size of the
     rebalanced assignment (hash-pinned to the corpus count — the
     conservation contract)."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    e = _corpus(spark, sf_dir)
     cells_assign, cents = _rebalanced_index(spark, sf_dir)
     cells = e.join(cells_assign.select("vec_id", "cell"), "vec_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    # k-row lineage truncation (r14, the _recall_metric pattern): the
-    # probe and the brute-force pass each run once; the three metric
-    # branches read ≤30-row checkpoints instead of re-deriving them.
-    ann = (
-        _ivf_probe(cells, cents, q)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    exact3 = _exact_top3(e, q).localCheckpoint(eager=True)
-    found = exact3.join(ann, ["query_id", "neighbor_id"], "left_semi")
-    return (
-        exact3.agg(
-            F.count("*").alias("n_exact_pairs"),
-            F.count_distinct("query_id").alias("n_queries"),
-        )
-        .join(found.agg(F.count("*").alias("n_found")))
-        .join(cells_assign.agg(F.count("*").cast("long").alias("n_assigned")))
-        .select(
-            "n_exact_pairs",
-            "n_queries",
-            "n_assigned",
-            (F.col("n_found") >= 0.3 * F.col("n_exact_pairs")).alias(
-                "recall_ge_30"
-            ),
-        )
+    q = _queries(e)
+    ann = _ivf_probe(cells, cents, q).select("query_id", "neighbor_id")
+    return _recall_metric(
+        ann, e, q, 0.3, "recall_ge_30",
+        extra=("n_assigned", lambda _ann: cells_assign),
     )
 
 
@@ -4822,21 +4373,14 @@ def llm_index_retrain_recall(spark, sf_dir):
     ids that surfaced (structurally zero — the retrain corpus never
     contained them).  Measured: 0.593/0.556 retrained vs 0.444/0.481
     frozen at sf0.001/sf0.01 — see the oracle comment."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
-    survivors = e.filter(~_is_tombstoned())
+    survivors = _corpus(spark, sf_dir).filter(~_is_tombstoned())
     new_cells, centroids = _ivf_retrained_parts(spark, sf_dir)
     cells = survivors.join(new_cells, "vec_id")
-    q = survivors.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _queries(survivors)
     ann = _ivf_probe(cells, centroids, q).select("query_id", "neighbor_id")
-    return _survivor_recall_metric(ann, survivors, q)
+    return _recall_metric(
+        ann, survivors, q, 0.3, "recall_ge_30", extra=_SURFACED_DELETED
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4858,18 +4402,10 @@ def _nprobe_sweep_candidates(spark, sf_dir, max_nprobe=_NPROBE_SWEEP_MAX):
     probe_rank), q) over the shared persisted IVF index."""
     from .clustering import _DIST_SQ
 
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    e = _corpus(spark, sf_dir)
     assigned, centroids = _ivf_index(spark, sf_dir)
     cells = e.join(assigned, "vec_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _queries(e)
     qc = q.crossJoin(F.broadcast(centroids)).withColumn(
         "cdist", F.expr(_DIST_SQ.format(a="q_emb", b="centroid"))
     )
@@ -4970,25 +4506,10 @@ def llm_sim_ann_nprobe_sweep(spark, sf_dir):
     # at nprobe=1/2/3/4 (sf0.01; 0.3667/0.500/0.6667/0.7333 at sf0.001)
     # against candidate volumes 643/1260/1887/2517 — the curve the
     # nprobe=2 default and the filtered op's widened 4 both sit on.
-    oracle=f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {sql_dot('embedding', 'embedding')} AS nsq
-      FROM embeddings
-    ), q AS (SELECT * FROM n WHERE vec_id < 10), exact3 AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
-      FROM q JOIN n e ON e.vec_id <> q.vec_id
-      QUALIFY row_number() OVER (
-          PARTITION BY q.vec_id
-          ORDER BY {_sql_cosine(sql_dot('q.embedding', 'e.embedding'), 'q.nsq', 'e.nsq')}
-                   DESC, e.vec_id ASC) <= 3
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-           CAST({_NPROBE_SWEEP_MAX} AS BIGINT) AS n_nprobes,
-           TRUE AS recall_monotone,
-           TRUE AS recall_ge_30_at_2
-    FROM exact3
-    """,
+    oracle=_exact3_oracle(
+        f"CAST({_NPROBE_SWEEP_MAX} AS BIGINT) AS n_nprobes,"
+        " TRUE AS recall_monotone, TRUE AS recall_ge_30_at_2"
+    ),
 )
 def llm_sim_ann_nprobe_sweep_recall(spark, sf_dir):
     """Hash-pinned contract of the nprobe sweep: exact ground-truth
@@ -5007,16 +4528,8 @@ def llm_sim_ann_nprobe_sweep_recall(spark, sf_dir):
             ).otherwise(False)
         ).alias("recall_monotone")
     )
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir)
+    q = _queries(e)
     exact3 = _exact_top3(e, q)
     at2 = curve.filter(F.col("nprobe") == 2).select(
         (F.col("recall") >= 0.3).alias("recall_ge_30_at_2")

@@ -33,11 +33,18 @@ def test_partitioned_overwrite_after_dynamic_operator_drops_stale_partitions(
     assert [tuple(r) for r in got] == [(3, "a")]
 
 
-def test_no_module_sets_partition_overwrite_mode_on_the_session():
-    pattern = re.compile(r"conf\.set\(\s*[\"'][^\"']*partitionOverwriteMode")
-    offenders = [
+def _modules_setting_on_the_session(key):
+    pattern = re.compile(rf"conf\.set\(\s*[\"'][^\"']*{re.escape(key)}")
+    return [
         str(p.relative_to(_PKG))
         for p in sorted(_PKG.rglob("*.py"))
         if pattern.search(p.read_text())
     ]
-    assert offenders == []
+
+
+def test_no_module_sets_partition_overwrite_mode_on_the_session():
+    assert _modules_setting_on_the_session("partitionOverwriteMode") == []
+
+
+def test_no_module_sets_shuffle_partitions_on_the_session():
+    assert _modules_setting_on_the_session("spark.sql.shuffle.partitions") == []

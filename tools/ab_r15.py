@@ -139,17 +139,6 @@ def _variants(target: str, spark, sf_dir):
             "old": lambda: _old_prune_pipeline(spark, sf_dir),
             "new": lambda: sim.llm_corpus_prune_pipeline(spark, sf_dir),
         }
-    if target == "stateful":
-        from etl_suite_spark.streaming.ops import stream_stateful_custom
-
-        # old = shipped default (session shuffle partitions = 32 state
-        # shards); new = the keys-derived 8-shard variant that was tried
-        # and REVERTED (measured flat-to-worse warm once its own
-        # distinct-count job is charged — see the op docstring).
-        return {
-            "old": lambda: stream_stateful_custom(spark, sf_dir),
-            "new": lambda: stream_stateful_custom(spark, sf_dir, state_shards=8),
-        }
     raise SystemExit(f"unknown target {target}")
 
 
